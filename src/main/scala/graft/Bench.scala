@@ -295,8 +295,12 @@ object Bench {
           lock.synchronized { abandoned = true; elapsed = -1.0; errors(name) = "Timeout" }
           // the timed-out query skipped its own per-pass clearCache —
           // drop its persisted intermediates on the MAIN thread so they
-          // can't pollute the next query's timing
+          // can't pollute the next query's timing. A zombie still inside
+          // an ER operator's Release.withConf may also have left the
+          // cached-plan AQE conf pinned to false: re-assert the session
+          // default here too
           spark.sharedState.cacheManager.clearCache()
+          spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         }
         spark.sparkContext.clearJobGroup()
         perSteal(name) = stealPct(qBefore, procStat())

@@ -45,7 +45,7 @@ object Graph {
     * and at 100 TB it removes the largest intermediate (the joined
     * per-order pair stream) entirely.
     */
-  private def coPairCounts(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def coPairCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // r13: the pair generator is the native pair_pack kernel — one
     // primitive loop per basket instead of posexplode + a slice()
@@ -62,6 +62,163 @@ object Graph {
       .groupBy($"pp").agg(count(lit(1)).as("n_orders"))
       .select(shiftright($"pp", 32).as("pa"),
         $"pp".bitwiseAND(lit(0xFFFFFFFFL)).as("pb"), $"n_orders")
+  }
+
+  // ------------------------------------------------------------------
+  // the shared kernel: one builder per derivation from coPairCounts
+  // ------------------------------------------------------------------
+
+  /** An undirected graph as a DIRECTED `(src, dst, extra…)` frame
+    * holding both directions of every edge, so its src set equals its
+    * dst set. The only constructor is [[SymEdges.apply]], which emits
+    * both directions of a canonical a < b pair frame — a `SymEdges`
+    * parameter is the symmetry contract as a type (LPA seeds its labels
+    * from the dst side and relies on it).
+    */
+  private[graft] final class SymEdges private (val df: DataFrame) {
+    def persist(): SymEdges = new SymEdges(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+    /** Cached PRE-PARTITIONED on dst, the LPA vote join's key: the
+      * InMemoryRelation keeps the hash partitioning, so each round
+      * shuffles only the |V|-row label table onto the edges. */
+    def persistByDst(): SymEdges =
+      new SymEdges(df.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK))
+  }
+
+  private[graft] object SymEdges {
+    /** Both directions of the canonical pairs `(a, b)` in ONE pass:
+      * `explode(array(struct…))` reads the pair frame once, so an
+      * unpersisted pair pipeline is never run once per direction. The
+      * `extra` columns (an LPA weight, a support count) ride along on
+      * both directions. */
+    def apply(pairs: DataFrame, a: String, b: String, extra: String*): SymEdges = {
+      def dir(s: String, d: String) =
+        struct(col(s).as("src") +: col(d).as("dst") +: extra.map(col): _*)
+      new SymEdges(pairs.select(explode(array(dir(a, b), dir(b, a))).as("e")).select("e.*"))
+    }
+  }
+
+  /** `(node, deg)`: rows per `key`. Over a [[SymEdges]] frame (key
+    * src) this is the undirected degree; over a bipartite edge list it
+    * is the out-degree of the key side. */
+  private[graft] def degrees(edges: DataFrame, key: String = "src"): DataFrame =
+    edges.groupBy(col(key).as("node")).agg(count(lit(1)).as("deg"))
+
+  /** CHUNKED ADJACENCY — the iteration state of the rank loops: one row
+    * `(key, ck, deg, nbrs)` per ≤64k-neighbor chunk, the neighbors
+    * hash(nbr)-bucketed into ⌈deg/64k⌉ chunks, so a celebrity node is a
+    * few bounded rows instead of one unbounded array. Every chunk
+    * carries the node's full degree (`deg`: `(node, deg)`); chunk layout
+    * never reaches a result, because the consumers' nbr-side partial
+    * aggregate re-combines the chunks exactly (integer adds). */
+  private[graft] def chunkedAdjacency(edges: DataFrame, key: String, nbr: String,
+                                      deg: DataFrame): DataFrame =
+    edges.join(deg.withColumnRenamed("node", key), key)
+      .withColumn("ck",
+        pmod(hash(col(nbr)), greatest(lit(1), ceil(col("deg") / 65536.0))).cast("int"))
+      .groupBy(col(key), col("ck"))
+      .agg(max("deg").as("deg"), collect_list(col(nbr)).as("nbrs"))
+
+  /** The triangle family's graph: the support-filtered canonical edges
+    * `(u, v)` (persisted), their degree table `(node, deg)`, and their
+    * degree-ordered orientation `(src, dst, dst_rank)` — every edge
+    * points from its lower-(degree, id) endpoint to the higher, so each
+    * triangle is enumerated exactly once
+    * and wedge fan-out is bounded by the degeneracy (√m worst case), not
+    * the max hub degree. The rank is a lexicographic (degree, id) STRUCT
+    * (Spark struct ordering ≡ DuckDB ROW ordering) — a strict total order
+    * at ANY id magnitude; the earlier deg·10⁹+id arithmetic pack silently
+    * collided once node ids crossed 10⁹. EAGERLY persisted: the triangle
+    * join reads this frame three times in one job, and without a
+    * materialized cache the three readers race the same in-flight
+    * partitions and recompute the edges⋈deg⋈deg build per reference. */
+  private def orientByDegree(spark: SparkSession, dir: String,
+                             minSupport: Int): (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val edges = coPairCounts(spark, dir).filter($"n_orders" >= minSupport)
+      .select($"pa".as("u"), $"pb".as("v")).persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = degrees(SymEdges(edges, "u", "v").df)
+    val ranked = edges
+      .join(deg.select($"node".as("u"), $"deg".as("du")), "u")
+      .join(deg.select($"node".as("v"), $"deg".as("dv")), "v")
+      .select($"u", $"v",
+        struct($"du".as("d"), $"u".as("i")).as("ru"),
+        struct($"dv".as("d"), $"v".as("i")).as("rv"))
+    val up = $"ru" < $"rv"
+    val oe = ranked
+      .select(when(up, $"u").otherwise($"v").as("src"),
+        when(up, $"v").otherwise($"u").as("dst"),
+        when(up, $"rv").otherwise($"ru").as("dst_rank"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    oe.count()
+    (edges, deg, oe)
+  }
+
+  /** Every triangle of an oriented edge frame once, as its corners
+    * `(a, b, c)`. r13: the wedge→closing-edge join keys ONE packed long
+    * (b·2³²|c) instead of a two-long tuple — halves the wedge exchange's
+    * bytes (its row count is the ΣC(outdeg,2) wedge mass, the largest
+    * shuffle of the op); b/c unpack exactly for ids < 2³¹, which
+    * coPairCounts' pair_pack enforces upstream. A consumer that only
+    * counts prunes the unpacked corners away. */
+  private def triangleCorners(oe: DataFrame): DataFrame = {
+    val spark = oe.sparkSession
+    import spark.implicits._
+    oe.as("e1")
+      .join(oe.as("e2"), $"e1.src" === $"e2.src" && $"e1.dst_rank" < $"e2.dst_rank")
+      .select($"e1.src".as("a"), shiftleft($"e1.dst", 32).bitwiseOR($"e2.dst").as("wkey"))
+      .join(oe.select(shiftleft($"src", 32).bitwiseOR($"dst").as("wkey")), "wkey")
+      .select($"a", shiftright($"wkey", 32).as("b"), $"wkey".bitwiseAND(lit(0xFFFFFFFFL)).as("c"))
+  }
+
+  /** The frontier-BFS hop loop. `seeds` are the hop-0 rows; their
+    * columns (ending in `node`, e.g. `(seed, node)` for a per-source
+    * BFS) key the visited set. Hop h joins the frontier to `edges` on
+    * src, keeps the distinct `(…, dst)` candidates that `newNodes(cands,
+    * reached)` reports unvisited, and appends them at hop h. Every
+    * persisted frame goes into `held`; returns `(seeds' columns…, hop)`.
+    * Hop count is fixed and small, so the plan stays shallow (no lineage
+    * cut); only id longs ride the shuffles. */
+  private def frontierBfs(edges: SymEdges, seeds: DataFrame, maxHops: Int,
+                          held: scala.collection.mutable.ListBuffer[DataFrame],
+                          newNodes: (DataFrame, DataFrame) => DataFrame = unvisited): DataFrame = {
+    val keys = seeds.columns.toSeq.map(col)
+    val e = edges.df
+    var reached = seeds.select(keys :+ lit(0).as("hop"): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    held += reached
+    var frontier = seeds
+    for (h <- 1 to maxHops) {
+      val cands = frontier.join(e, frontier("node") === e("src"))
+        .select(keys.init :+ col("dst").as("node"): _*).distinct()
+      val next = newNodes(cands, reached).persist(StorageLevel.MEMORY_AND_DISK)
+      reached = reached.union(next.select(keys :+ lit(h).as("hop"): _*))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      held += next; held += reached
+      frontier = next
+    }
+    reached
+  }
+
+  /** The exact per-hop step: candidates minus the visited set, one
+    * anti-join (AQE-sized — broadcast while the node-cardinality visited
+    * table fits, shuffle when it doesn't, never a forced hint). */
+  private def unvisited(cands: DataFrame, reached: DataFrame): DataFrame =
+    cands.join(reached.drop("hop"), cands.columns.toSeq, "left_anti")
+
+  /** The static side of the [[partPagerank]] / [[graphPpr]] loops, built
+    * once: the persisted undirected degree table and chunked adjacency
+    * of the full co-purchase graph. The canonical pairs are persisted
+    * for the build only — deg and adj both read them, and uncached each
+    * reader would re-run the coPairCounts aggregate. */
+  private def rankState(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val pairs = coPairCounts(spark, dir).select("pa", "pb").persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = SymEdges(pairs, "pa", "pb").df
+    val deg = degrees(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = chunkedAdjacency(edges, "src", "dst", deg).persist(StorageLevel.MEMORY_AND_DISK)
+    adj.count() // materialize the iteration state once
+    pairs.unpersist(false) // only adj/deg feed the loop
+    (deg, adj)
   }
 
   /** PageRank over the undirected co-purchase graph, 5 damped
@@ -89,23 +246,7 @@ object Graph {
     */
   def partPagerank(spark: SparkSession, dir: String, topK: Int = 100): DataFrame = {
     import spark.implicits._
-    // build-scoped persist: the union's two branches and the two edge
-    // consumers (deg, adj) would otherwise re-run the coPairCounts
-    // aggregate up to four times
-    val pairs = coPairCounts(spark, dir).select($"pa".as("src"), $"pb".as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs.unionByName(pairs.select($"dst".as("src"), $"src".as("dst")))
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("src", "node")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val adj = edges.join(deg.withColumnRenamed("node", "src"), "src")
-      .withColumn("ck",
-        pmod(hash($"dst"), greatest(lit(1), ceil($"deg" / 65536.0))).cast("int"))
-      .groupBy($"src", $"ck")
-      .agg(max($"deg").as("deg"), collect_list($"dst").as("dsts"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count() // materialize the iteration state once
-    pairs.unpersist(false) // only adj/deg feed the loop
+    val (deg, adj) = rankState(spark, dir)
     val n = deg.count()
     val teleport = 150000000L / n // (1-d)·10⁹ / n, floored once on the driver
     // the loop builds ONE lazy DAG: every stage executes once.
@@ -115,8 +256,8 @@ object Graph {
     for (_ <- 1 to Iters) {
       val contrib = adj
         .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select($"dsts", expr("pr DIV deg").as("c"))
-        .select(explode($"dsts").as("dst"), $"c")
+        .select($"nbrs", expr("pr DIV deg").as("c"))
+        .select(explode($"nbrs").as("dst"), $"c")
       ranks = contrib.groupBy($"dst")
         .agg(sum($"c").as("s"))
         .select($"dst".as("node"),
@@ -201,11 +342,8 @@ object Graph {
   def kcore(spark: SparkSession, dir: String, k: Int = 64,
       rounds: Int = 5): DataFrame = {
     import spark.implicits._
-    val pairs = coPairCounts(spark, dir).select($"pa", $"pb")
     val held = scala.collection.mutable.ListBuffer[DataFrame]()
-    var edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-      .union(pairs.select($"pb".as("src"), $"pa".as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var edges = SymEdges(coPairCounts(spark, dir), "pa", "pb").persist().df
     held += edges
     // each peel filters against the DROPPED node set, not the kept one:
     // in the bite zone the peel removes a thin tail (hundreds of nodes
@@ -218,8 +356,7 @@ object Graph {
     var r = 0
     var done = false
     while (r < rounds && !done) {
-      val dropped = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-        .filter($"deg" < k).select($"src".as("node"))
+      val dropped = degrees(edges).filter($"deg" < k).select($"node")
         .persist(StorageLevel.MEMORY_AND_DISK)
       held += dropped
       if (dropped.isEmpty) done = true
@@ -241,9 +378,7 @@ object Graph {
     // node-cardinality output: one eager materialization into
     // reference-managed storage, then every round's cache is released
     Release.checkpointed(
-      edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-        .select($"src".as("part_id"), $"deg")
-        .orderBy($"part_id"),
+      degrees(edges).select($"node".as("part_id"), $"deg").orderBy($"part_id"),
       held.toSeq: _*)
   }
 
@@ -317,8 +452,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     held += edges
     def support(e: DataFrame): DataFrame = {
-      val sym = e.select($"u".as("src"), $"v".as("dst"))
-        .union(e.select($"v".as("src"), $"u".as("dst")))
+      val sym = SymEdges(e, "u", "v").df
       // r13: the wedge aggregate and the edge join key ONE packed long
       // (u·2³²|v, injective for ids < 2³¹ — enforced upstream by
       // pair_pack) instead of a two-long tuple: halves the wedge
@@ -381,6 +515,14 @@ object Graph {
          |ORDER BY w.u, w.v""".stripMargin
   }
 
+  /** The persisted symmetric support-≥2 edge table the BFS family walks. */
+  private def frequentEdges(spark: SparkSession, dir: String): SymEdges =
+    SymEdges(coPairCounts(spark, dir).filter(col("n_orders") >= 2), "pa", "pb").persist()
+
+  /** The multi-source seed set: every 50th part id on the graph. */
+  private def bfsSeeds(edges: SymEdges): DataFrame =
+    edges.df.select(col("src").as("node")).distinct().filter(pmod(col("node"), lit(50)) === 0)
+
   /** Multi-source BFS over the frequent co-purchase graph (pair
     * support ≥ 2, same pruning as [[triangleCount]]): minimum hop
     * distance from the seed set (every 50th part id) out to 3 hops —
@@ -402,29 +544,9 @@ object Graph {
     */
   def graphBfs(spark: SparkSession, dir: String, maxHops: Int = 3): DataFrame = {
     import spark.implicits._
-    val pairs = coPairCounts(spark, dir)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-    val held = scala.collection.mutable.ListBuffer[DataFrame]()
-    val edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-      .union(pairs.select($"pb".as("src"), $"pa".as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    held += edges
-    val seeds = edges.select($"src".as("node")).distinct()
-      .filter(pmod($"node", lit(50)) === 0)
-    var reached = seeds.select($"node", lit(0).as("hop"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    held += reached
-    var frontier = seeds
-    for (h <- 1 to maxHops) {
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select($"dst".as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      reached = reached.union(next.select($"node", lit(h).as("hop")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      held += next; held += reached
-      frontier = next
-    }
+    val edges = frequentEdges(spark, dir)
+    val held = scala.collection.mutable.ListBuffer(edges.df)
+    val reached = frontierBfs(edges, bfsSeeds(edges), maxHops, held)
     // node-cardinality output → checkpointed release (no cache outlives)
     Release.checkpointed(
       reached.select($"node".as("part_id"), $"hop").orderBy($"hop", $"part_id"),
@@ -474,30 +596,12 @@ object Graph {
   def graphReachProfile(spark: SparkSession, dir: String,
                         maxHops: Int = 3, nSeeds: Int = 4): DataFrame = {
     import spark.implicits._
-    val pairs = coPairCounts(spark, dir)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-    val held = scala.collection.mutable.ListBuffer[DataFrame]()
-    val edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-      .union(pairs.select($"pb".as("src"), $"pa".as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    held += edges
-    val seeds = edges.select($"src".as("node")).distinct()
+    val edges = frequentEdges(spark, dir)
+    val held = scala.collection.mutable.ListBuffer(edges.df)
+    val seeds = edges.df.select($"src".as("node")).distinct()
       .orderBy($"node").limit(nSeeds)
       .select($"node".as("seed"), $"node")
-    var reached = seeds.withColumn("hop", lit(0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    held += reached
-    var frontier = seeds
-    for (h <- 1 to maxHops) {
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select($"seed", $"dst".as("node")).distinct()
-        .join(reached.select($"seed", $"node"), Seq("seed", "node"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      reached = reached.union(next.withColumn("hop", lit(h)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      held += next; held += reached
-      frontier = next
-    }
+    val reached = frontierBfs(edges, seeds, maxHops, held)
     // ≤ nSeeds·(maxHops+1) rows → eager-grid release
     Release.grid(
       reached.groupBy($"seed", $"hop").agg(count(lit(1)).as("n_nodes"))
@@ -540,56 +644,17 @@ object Graph {
 
   /** Triangle count over the FREQUENT co-purchase graph (pair support
     * ≥ 2 orders — random single co-occurrences pruned before any
-    * quadratic step). Classic degree-ordered orientation: every edge
-    * points from its lower-(degree, id) endpoint to the higher, so each
-    * triangle is counted exactly once and the wedge join enumerates
-    * Σ C(outdeg, 2) pairs — outdegree is bounded by the graph's
-    * degeneracy under this orientation (√m worst case), not by the max
-    * hub degree, which is what keeps the wedge stage from exploding on
-    * a power-law co-purchase graph at scale. Three hash joins on id
-    * keys; only (src, dst, rank) longs ride the shuffles.
-    *
-    * The orientation rank is a lexicographic (degree, id) STRUCT
-    * comparison (Spark struct ordering ≡ DuckDB ROW ordering) — a
-    * strict total order at ANY id magnitude; the earlier deg·10⁹+id
-    * arithmetic pack silently collided once node ids crossed 10⁹.
+    * quadratic step). Classic degree-ordered orientation
+    * ([[orientByDegree]]): each triangle is counted exactly once and the
+    * wedge join enumerates Σ C(outdeg, 2) pairs — outdegree is bounded by
+    * the graph's degeneracy under this orientation, not by the max hub
+    * degree, which is what keeps the wedge stage from exploding on a
+    * power-law co-purchase graph at scale. Three hash joins on id keys;
+    * only (src, dst, rank) longs ride the shuffles.
     */
   def triangleCount(spark: SparkSession, dir: String, minSupport: Int = 2): DataFrame = {
-    import spark.implicits._
-    // undirected support-filtered edges, canonical u < v by part id
-    val edges = coPairCounts(spark, dir)
-      .filter($"n_orders" >= minSupport)
-      .select($"pa".as("u"), $"pb".as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.select($"u".as("node")).unionAll(edges.select($"v".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-    val ranked = edges
-      .join(deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du"), Seq("u"))
-      .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), Seq("v"))
-      .select($"u", $"v",
-        struct($"du".as("d"), $"u".as("i")).as("ru"),
-        struct($"dv".as("d"), $"v".as("i")).as("rv"))
-    // orient low-rank → high-rank; EAGERLY persisted — the triangle
-    // join reads this frame three times in one job, and without a
-    // materialized cache the three readers race the same in-flight
-    // partitions and recompute the edges⋈deg⋈deg build per reference
-    val oe = ranked
-      .select(when($"ru" < $"rv", $"u").otherwise($"v").as("src"),
-        when($"ru" < $"rv", $"v").otherwise($"u").as("dst"),
-        when($"ru" < $"rv", $"rv").otherwise($"ru").as("dst_rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    oe.count()
-    // r13: the wedge→closing-edge join keys ONE packed long (dst1·2³²|
-    // dst2) instead of a two-long tuple — halves the wedge exchange's
-    // bytes (its row count is the ΣC(outdeg,2) wedge mass, the largest
-    // shuffle of the op). Injective for ids < 2³¹, which coPairCounts'
-    // pair_pack already enforces upstream (it throws on violation).
-    val wedges = oe.as("e1")
-      .join(oe.as("e2"), $"e1.src" === $"e2.src" && $"e1.dst_rank" < $"e2.dst_rank")
-      .select((shiftleft($"e1.dst", 32).bitwiseOR($"e2.dst")).as("wkey"))
-    val closing = oe.select((shiftleft($"src", 32).bitwiseOR($"dst")).as("wkey"))
-    val tri = wedges.join(closing, "wkey")
-      .agg(count(lit(1)).as("n_triangles"))
+    val (edges, deg, oe) = orientByDegree(spark, dir, minSupport)
+    val tri = triangleCorners(oe).agg(count(lit(1)).as("n_triangles"))
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
     Release.grid(
       nNodes.crossJoin(edges.agg(count(lit(1)).as("n_edges"))).crossJoin(tri),
@@ -698,8 +763,7 @@ object Graph {
       .join(brand.select($"p_partkey".as("j"), $"p_brand".as("brand_j")), "j")
     val intra = labeled.filter($"brand_i" === $"brand_j")
       .groupBy($"brand_i".as("brand")).agg(count(lit(1)).as("e_c"))
-    val deg = pairs.select($"i".as("node")).unionAll(pairs.select($"j".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
+    val deg = degrees(SymEdges(pairs, "i", "j").df)
       .join(brand.select($"p_partkey".as("node"), $"p_brand".as("brand")), "node")
       .groupBy($"brand").agg(sum($"deg").as("d_c"), count(lit(1)).as("n_nodes"))
     val out = deg.join(intra, Seq("brand"), "left_outer")
@@ -764,13 +828,8 @@ object Graph {
     */
   def partRecommend(spark: SparkSession, dir: String, topK: Int = 3): DataFrame = {
     import spark.implicits._
-    // persisted: both symmetrization branches read the pair aggregate
-    val pairs = coPairCounts(spark, dir)
-      .filter($"n_orders" >= 2)
-      .select($"pa".as("u"), $"pb".as("v"), $"n_orders".as("support"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sym = pairs.select($"u".as("part"), $"v".as("rec_part"), $"support")
-      .unionByName(pairs.select($"v".as("part"), $"u".as("rec_part"), $"support"))
+    val sym = SymEdges(coPairCounts(spark, dir).filter($"n_orders" >= 2), "pa", "pb", "n_orders")
+      .df.select($"src".as("part"), $"dst".as("rec_part"), $"n_orders".as("support"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"part").orderBy($"support".desc, $"rec_part")
     // k rows PER PART — corpus-scaling output → checkpointed release
@@ -778,8 +837,7 @@ object Graph {
       sym.withColumn("rec_rank", row_number().over(w))
         .filter($"rec_rank" <= topK)
         .select($"part", $"rec_rank", $"rec_part", $"support")
-        .orderBy($"part", $"rec_rank"),
-      pairs)
+        .orderBy($"part", $"rec_rank"))
   }
 
   val partRecommendSql: String =
@@ -826,9 +884,7 @@ object Graph {
     val pairs = coPairCounts(spark, dir)
       .filter($"n_orders" >= 2).select($"pa", $"pb")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-      .union(pairs.select($"pb".as("src"), $"pa".as("dst")))
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+    val edges = SymEdges(pairs, "pa", "pb").df
     // middle-node term: only deg >= 2 nodes can center a wedge, and the
     // explicit filter must come BEFORE the term projection — a deg-1
     // node's ln(1) = 0 would divide-by-zero during evaluation even
@@ -837,7 +893,7 @@ object Graph {
     // job; unmaterialized, both readers race the same in-flight
     // partitions and the edges⋈deg build runs per reference (the
     // triangleCount lesson)
-    val mid = edges.join(deg.filter($"deg" >= 2), "src")
+    val mid = edges.join(degrees(edges).filter($"deg" >= 2).withColumnRenamed("node", "src"), "src")
       .select($"src".as("w"), $"dst",
         expr("cast(100000000000 div cast(round(ln(deg) * 100000, 0) as bigint) as bigint)")
           .as("term_u"))
@@ -901,17 +957,15 @@ object Graph {
     val pairs = coPairCounts(spark, dir)
       .filter($"n_orders" >= 2).select($"pa", $"pb")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-      .union(pairs.select($"pb".as("src"), $"pa".as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+    val edges = SymEdges(pairs, "pa", "pb").persist().df
+    val deg = degrees(edges)
     val scored = edges.as("x").join(edges.as("y"),
         $"x.src" === $"y.src" && $"x.dst" < $"y.dst")
       .groupBy($"x.dst".as("u"), $"y.dst".as("v"))
       .agg(count(lit(1)).as("n_common"))
     val jn = scored
-      .join(deg.select($"src".as("u"), $"deg".as("du")), "u")
-      .join(deg.select($"src".as("v"), $"deg".as("dv")), "v")
+      .join(deg.select($"node".as("u"), $"deg".as("du")), "u")
+      .join(deg.select($"node".as("v"), $"deg".as("dv")), "v")
       .withColumn("uni", $"du" + $"dv" - $"n_common")
       .withColumn("jac_micro", (($"n_common" * 1000000L
         - (($"n_common" * 1000000L) % $"uni")) / $"uni").cast("long"))
@@ -972,17 +1026,8 @@ object Graph {
     val li = incidence(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val nOrders = li.select($"ok").distinct().count()
     val cnt = li.groupBy($"pk").agg(count(lit(1)).as("c"))
-    // persisted: BOTH directed-rule branches of the union read the
-    // pair aggregate — unmaterialized, the coPairCounts build runs
-    // once per branch
-    val pairs = coPairCounts(spark, dir)
-      .filter($"n_orders" >= 2)
-      .select($"pa", $"pb", $"n_orders".as("cab"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rules = pairs
-      .select($"pa".as("antecedent"), $"pb".as("consequent"), $"cab")
-      .unionByName(pairs
-        .select($"pb".as("antecedent"), $"pa".as("consequent"), $"cab"))
+    val rules = SymEdges(coPairCounts(spark, dir).filter($"n_orders" >= 2), "pa", "pb", "n_orders")
+      .df.select($"src".as("antecedent"), $"dst".as("consequent"), $"n_orders".as("cab"))
       .join(cnt.select($"pk".as("antecedent"), $"c".as("ca")), "antecedent")
       .join(cnt.select($"pk".as("consequent"), $"c".as("cc")), "consequent")
     Release.grid(
@@ -992,7 +1037,7 @@ object Graph {
           round(lit(nOrders.toDouble) * $"cab".cast("double")
             / ($"ca".cast("double") * $"cc".cast("double")), 6).as("lift"))
         .orderBy($"lift".desc, $"antecedent", $"consequent").limit(topK),
-      li, pairs)
+      li)
   }
 
   val basketRulesSql: String =
@@ -1153,27 +1198,14 @@ object Graph {
     */
   def graphBfsBloom(spark: SparkSession, dir: String, maxHops: Int = 3): DataFrame = {
     import spark.implicits._
-    val pairs = coPairCounts(spark, dir)
-      .filter($"n_orders" >= 2).select($"pa", $"pb")
-    val held = scala.collection.mutable.ListBuffer[DataFrame]()
-    val edges = pairs.select($"pa".as("src"), $"pb".as("dst"))
-      .union(pairs.select($"pb".as("src"), $"pa".as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    held += edges
-    val seeds = edges.select($"src".as("node")).distinct()
-      .filter(pmod($"node", lit(50)) === 0)
-    var reached = seeds.select($"node", lit(0).as("hop"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    held += reached
-    var frontier = seeds
-    for (h <- 1 to maxHops) {
+    val edges = frequentEdges(spark, dir)
+    val held = scala.collection.mutable.ListBuffer(edges.df)
+    val reached = frontierBfs(edges, bfsSeeds(edges), maxHops, held, { (cands, reached) =>
       val nReached = math.max(reached.count(), 1L)
       val visitedBloom = reached
         .agg(graft.functions.BloomFunctions.bloom_agg($"node",
           math.min(nReached, RuntimeFilter.MaxBloomItems)).as("bf"))
         .first().getAs[Array[Byte]]("bf")
-      val cands = frontier.join(edges, frontier("node") === edges("src"))
-        .select($"dst".as("node")).distinct()
       // route on the bloom verdict: a bloom NEGATIVE is definitely
       // unvisited (no false negatives) and skips the anti-join
       // entirely; a bloom POSITIVE is only MAYBE visited — false
@@ -1183,15 +1215,9 @@ object Graph {
       // equality spec)
       val mightBeVisited = graft.functions.BloomFunctions
         .bloom_might_contain(lit(visitedBloom), $"node")
-      val next = cands.filter(!mightBeVisited)
-        .unionByName(cands.filter(mightBeVisited)
-          .join(reached, Seq("node"), "left_anti"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      reached = reached.union(next.select($"node", lit(h).as("hop")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      held += next; held += reached
-      frontier = next
-    }
+      cands.filter(!mightBeVisited)
+        .unionByName(unvisited(cands.filter(mightBeVisited), reached))
+    })
     Release.checkpointed(
       reached.select($"node".as("part_id"), $"hop").orderBy($"hop", $"part_id"),
       held.toSeq: _*)
@@ -1235,17 +1261,10 @@ object Graph {
       .join(Tables.lineitem(spark, dir), $"o_orderkey" === $"l_orderkey")
       .select($"o_custkey".as("c"), $"l_partkey".as("p")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK) // build-scoped: both adjacencies read it
-    def chunkedAdj(keyCol: String, valCol: String): DataFrame = {
-      val deg = ep.groupBy(col(keyCol)).agg(count(lit(1)).as("deg"))
-      ep.join(deg, keyCol)
-        .withColumn("ck",
-          pmod(hash(col(valCol)), greatest(lit(1), ceil($"deg" / 65536.0))).cast("int"))
-        .groupBy(col(keyCol), $"ck")
-        .agg(collect_list(col(valCol)).as("vs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    val partBuyers = chunkedAdj("p", "c") // p → its buyers (hub update)
-    val custBasket = chunkedAdj("c", "p") // c → its parts (authority update)
+    def adj(key: String, nbr: String): DataFrame =
+      chunkedAdjacency(ep, key, nbr, degrees(ep, key)).persist(StorageLevel.MEMORY_AND_DISK)
+    val partBuyers = adj("p", "c") // p → its buyers (hub update)
+    val custBasket = adj("c", "p") // c → its parts (authority update)
     partBuyers.count(); custBasket.count() // materialize the static sides once
     ep.unpersist(false) // only the adjacency chunks feed the loop
     // the raw score table feeds BOTH its max aggregate and the
@@ -1294,11 +1313,11 @@ object Graph {
     for (_ <- 1 to HitsIters) {
       val hub = normalize(
         partBuyers.join(auth, "p")
-          .select(explode($"vs").as("c"), $"s")
+          .select(explode($"nbrs").as("c"), $"s")
           .groupBy($"c").agg(sum($"s").as("s")), "c")
       auth = normalize(
         custBasket.join(hub, "c")
-          .select(explode($"vs").as("p"), $"s")
+          .select(explode($"nbrs").as("p"), $"s")
           .groupBy($"p").agg(sum($"s").as("s")), "p")
     }
     // top-k output: eager-grid release of the two adjacency caches;
@@ -1341,31 +1360,11 @@ object Graph {
 
   private val LpaRounds = 3
 
-  /** Weighted label-propagation communities over the co-purchase graph
-    * — the community DETECTOR complementing [[graphModularity]] (which
-    * only scores a given partition) and [[partComponents]] (pure
-    * connectivity: one label per connected component regardless of
-    * structure). Classic synchronous LPA: every node starts as its own
-    * community; each round it adopts the community with the largest
-    * co-purchase-weighted vote among its neighbors (tie → smallest
-    * label, which also makes the sync update deterministic — vanilla
-    * LPA's random tie-break would be oracle-hostile).
-    *
-    * Scale shape: the persisted weighted edge table is built once (the
-    * shared map-side coPairCounts stage); each round is one
-    * dst-keyed hash join (labels are |V|-row, AQE broadcasts while they
-    * fit) + one (src, lbl) partial-agg exchange + the per-node argmax
-    * as a map-side struct-max — no window, no sort. 3 rounds keeps the
-    * DAG shallow enough that no lineage cut is needed (contrast the
-    * 5-round pagerank loop, which checkpoints).
-    */
-  /** The synchronous weighted-LPA loop over a DIRECTED (src, dst, w)
-    * edge frame (callers pass both directions for undirected graphs) —
-    * shared by [[graphLpa]] and Training.embeddingCommunities. Caches
-    * the edges PRE-PARTITIONED on dst (the per-round join key): the
-    * InMemoryRelation preserves the hash partitioning, so each vote
-    * round shuffles only the |V|-row label table onto the edges; the
-    * |E|-row side never rides the wire again after the build.
+  /** The synchronous weighted-LPA loop over a [[SymEdges]] `(src, dst,
+    * w)` frame — shared by [[graphLpa]] and
+    * Training.embeddingCommunities. Caches the edges pre-partitioned on
+    * dst ([[SymEdges.persistByDst]]), so after the build the |E|-row side
+    * never rides the wire again.
     *
     * Returns the COMMUNITY SIZES (community, n_members) after `rounds`
     * min-tie-break mode votes, via the eager-grid convention: the
@@ -1374,11 +1373,11 @@ object Graph {
     * frame — no persisted block outlives the call (the rpBandSweep /
     * sourceJsdMatrix discipline; the r9 judge flagged the previous
     * lazy return as a cache leak in both callers). */
-  private[graft] def lpaCommunities(edgesIn: DataFrame, rounds: Int): DataFrame = {
-    val spark = edgesIn.sparkSession
+  private[graft] def lpaCommunities(edgesIn: SymEdges, rounds: Int): DataFrame = {
+    val spark = edgesIn.df.sparkSession
     import spark.implicits._
-    val edges = edgesIn.repartition($"dst").persist()
-    edges.count() // materialize the iteration state once (family doctrine)
+    val edges = edgesIn.persistByDst()
+    edges.df.count() // materialize the iteration state once (family doctrine)
     val out = lpaPropagate(edges, rounds)
       .groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_members"))
@@ -1386,7 +1385,7 @@ object Graph {
     // r14: through Release.grid — the same collect + unpersist + rewrap
     // as the former manual block, plus the grid bound and the
     // planCapture evidence hook the manual collect bypassed
-    Release.grid(out, edges)
+    Release.grid(out, edges.df)
   }
 
   /** The bare vote loop over an ALREADY-PERSISTED dst-partitioned edge
@@ -1395,14 +1394,15 @@ object Graph {
     * clone-family expansion) can compose before collecting. Callers own
     * the edge cache lifecycle: materialize before, unpersist after the
     * downstream action — nothing here may outlive the caller. */
-  private[graft] def lpaPropagate(edges: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
+  private[graft] def lpaPropagate(edges: SymEdges, rounds: Int): DataFrame = {
+    val e = edges.df
+    val spark = e.sparkSession
     import spark.implicits._
-    // r14 (guide §2.4): the initial label set is the DST side — both
-    // callers pass symmetric edge frames (src set ≡ dst set), and the
-    // edge cache is hash-partitioned on dst, so the distinct reuses the
-    // cached partitioning instead of paying a src-keyed exchange.
-    var labels = edges.select($"dst".as("node")).distinct()
+    // r14 (guide §2.4): the initial label set is the DST side — the
+    // frame is symmetric (src set ≡ dst set, guaranteed by SymEdges) and
+    // hash-partitioned on dst, so the distinct reuses the cached
+    // partitioning instead of paying a src-keyed exchange.
+    var labels = e.select($"dst".as("node")).distinct()
       .select($"node", $"node".as("lbl"))
     for (_ <- 1 to rounds) {
       // r14: the per-round two-level aggregate (sum votes by (src, lbl),
@@ -1410,7 +1410,7 @@ object Graph {
       // weighted_mode aggregate keyed on src: partial vote maps combine
       // map-side, one exchange per round, bit-identical result
       // (WeightedModeSpec pins equivalence to the old formulation).
-      labels = edges.join(labels.withColumnRenamed("node", "dst"), "dst")
+      labels = e.join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy($"src")
         .agg(graft.functions.AggFunctions.weighted_mode($"lbl", $"w").as("lbl"))
         .withColumnRenamed("src", "node")
@@ -1426,14 +1426,28 @@ object Graph {
   // support-≥2 table and the per-round join becomes the job
   private val LpaMinSupport = 2
 
+  /** Weighted label-propagation communities over the co-purchase graph
+    * — the community DETECTOR complementing [[graphModularity]] (which
+    * only scores a given partition) and [[partComponents]] (pure
+    * connectivity: one label per connected component regardless of
+    * structure). Classic synchronous LPA: every node starts as its own
+    * community; each round it adopts the community with the largest
+    * co-purchase-weighted vote among its neighbors (tie → smallest
+    * label, which also makes the sync update deterministic — vanilla
+    * LPA's random tie-break would be oracle-hostile).
+    *
+    * Scale shape: the persisted weighted edge table is built once (the
+    * shared map-side coPairCounts stage); each round is one
+    * dst-keyed hash join (labels are |V|-row, AQE broadcasts while they
+    * fit) + one src-keyed weighted_mode exchange — no window, no sort.
+    * 3 rounds keep the DAG shallow enough that no lineage cut is needed
+    * (like pagerank's one lazy DAG; only HITS cuts lineage per round).
+    */
   def graphLpa(spark: SparkSession, dir: String,
                minSupport: Int = LpaMinSupport): DataFrame = {
-    import spark.implicits._
-    val pairs = coPairCounts(spark, dir).filter($"n_orders" >= minSupport)
-    val edges = pairs
-      .select($"pa".as("src"), $"pb".as("dst"), $"n_orders".as("w"))
-      .unionByName(pairs.select($"pb".as("src"), $"pa".as("dst"), $"n_orders".as("w")))
-    lpaCommunities(edges, LpaRounds)
+    val pairs = coPairCounts(spark, dir).filter(col("n_orders") >= minSupport)
+      .withColumnRenamed("n_orders", "w")
+    lpaCommunities(SymEdges(pairs, "pa", "pb", "w"), LpaRounds)
   }
 
   val graphLpaSql: String = {
@@ -1479,45 +1493,18 @@ object Graph {
     * on hubs — which is why both are reported.
     *
     * Exactness: per-node triangle counts come from projecting each
-    * oriented triangle onto its 3 corners (one extra grid... node-
-    * cardinality aggregate over the SAME triangle join
-    * [[triangleCount]] runs — no new join shape); coefficients are
-    * exact micro floors; sums/products ride DECIMAL(38,0)/HUGEINT.
+    * oriented triangle onto its 3 corners — one extra node-cardinality
+    * aggregate over the SAME triangle join [[triangleCount]] runs (no
+    * new join shape); coefficients are exact micro floors; sums and
+    * products ride DECIMAL(38,0)/HUGEINT.
     *
     * Scale: inherits the degree-ordered oriented-edge discipline (the
     * triangle join's fan-out is bounded by orientation); everything
     * after the join is node-cardinality aggregation. One row out. */
   def graphClustering(spark: SparkSession, dir: String, minSupport: Int = 2): DataFrame = {
     import spark.implicits._
-    val edges = coPairCounts(spark, dir)
-      .filter($"n_orders" >= minSupport)
-      .select($"pa".as("u"), $"pb".as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.select($"u".as("node")).unionAll(edges.select($"v".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-    val ranked = edges
-      .join(deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du"), Seq("u"))
-      .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), Seq("v"))
-      .select($"u", $"v",
-        struct($"du".as("d"), $"u".as("i")).as("ru"),
-        struct($"dv".as("d"), $"v".as("i")).as("rv"))
-    val oe = ranked
-      .select(when($"ru" < $"rv", $"u").otherwise($"v").as("src"),
-        when($"ru" < $"rv", $"v").otherwise($"u").as("dst"),
-        when($"ru" < $"rv", $"rv").otherwise($"ru").as("dst_rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    oe.count()
-    // r13: packed single-long wedge key (the triangleCount change) —
-    // b/c reconstruct exactly from the key, so the wedge exchange
-    // carries (a, wkey) instead of three longs plus a two-long key
-    val triCorners = oe.as("e1")
-      .join(oe.as("e2"), $"e1.src" === $"e2.src" && $"e1.dst_rank" < $"e2.dst_rank")
-      .select($"e1.src".as("a"),
-        (shiftleft($"e1.dst", 32).bitwiseOR($"e2.dst")).as("wkey"))
-      .join(oe.select((shiftleft($"src", 32).bitwiseOR($"dst")).as("wkey")), "wkey")
-      .select($"a", shiftright($"wkey", 32).as("b"),
-        $"wkey".bitwiseAND(lit(0xFFFFFFFFL)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (edges, deg, oe) = orientByDegree(spark, dir, minSupport)
+    val triCorners = triangleCorners(oe).persist(StorageLevel.MEMORY_AND_DISK)
     val tv = triCorners.select($"a".as("node"))
       .unionAll(triCorners.select($"b".as("node")))
       .unionAll(triCorners.select($"c".as("node")))
@@ -1628,21 +1615,16 @@ object Graph {
     * into one map-side-partial aggregate. One row out. */
   def graphAssortativity(spark: SparkSession, dir: String, minSupport: Int = 2): DataFrame = {
     import spark.implicits._
-    // persisted like triangleCount's edge set: edges are read by the
-    // degree union (2×) and both directed projections — uncached, each
+    // persisted like triangleCount's edge set: the symmetric edges are
+    // read by the degree aggregate and the moment pass — uncached, each
     // reference would re-run the coPairCounts aggregation
-    val edges = coPairCounts(spark, dir)
-      .filter($"n_orders" >= minSupport)
-      .select($"pa".as("u"), $"pb".as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.select($"u".as("node")).unionAll(edges.select($"v".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val directed = edges.unionAll(edges.select($"v".as("u"), $"u".as("v")))
+    val edges = SymEdges(coPairCounts(spark, dir).filter($"n_orders" >= minSupport), "pa", "pb")
+      .persist().df
+    val deg = degrees(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val m = directed
-      .join(deg.select($"node".as("u"), $"deg".as("du")), "u")
-      .join(deg.select($"node".as("v"), $"deg".as("dv")), "v")
+    val m = edges
+      .join(deg.select($"node".as("src"), $"deg".as("du")), "src")
+      .join(deg.select($"node".as("dst"), $"deg".as("dv")), "dst")
       .agg(
         count(lit(1)).as("n2"),
         sum(d($"du")).as("sx"),
@@ -1718,9 +1700,8 @@ object Graph {
     */
   def graphPowerlawFit(spark: SparkSession, dir: String, minSupport: Int = 2): DataFrame = {
     import spark.implicits._
-    val pairs = coPairCounts(spark, dir).filter($"n_orders" >= minSupport)
-    val deg = pairs.select($"pa".as("node")).unionAll(pairs.select($"pb".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
+    val deg = degrees(SymEdges(coPairCounts(spark, dir).filter($"n_orders" >= minSupport),
+      "pa", "pb").df)
     // persisted: the grid (≲ max-degree rows) feeds both the α totals
     // and the KS branch — without the cache each branch re-runs the
     // full edge pass
@@ -1808,8 +1789,7 @@ object Graph {
     import spark.implicits._
     val edges = coPairCounts(spark, dir).filter($"n_orders" >= minSupport)
       .select($"pa", $"pb").persist()
-    val deg = edges.select($"pa".as("node")).unionAll(edges.select($"pb".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
+    val deg = degrees(SymEdges(edges, "pa", "pb").df)
     val edgeMin = edges
       .join(deg.withColumnRenamed("node", "pa").withColumnRenamed("deg", "da"), "pa")
       .join(deg.withColumnRenamed("node", "pb").withColumnRenamed("deg", "db"), "pb")
@@ -1895,20 +1875,7 @@ object Graph {
     */
   def graphPpr(spark: SparkSession, dir: String, topK: Int = 50): DataFrame = {
     import spark.implicits._
-    val pairs = coPairCounts(spark, dir).select($"pa".as("src"), $"pb".as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs.unionByName(pairs.select($"dst".as("src"), $"src".as("dst")))
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("src", "node")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val adj = edges.join(deg.withColumnRenamed("node", "src"), "src")
-      .withColumn("ck",
-        pmod(hash($"dst"), greatest(lit(1), ceil($"deg" / 65536.0))).cast("int"))
-      .groupBy($"src", $"ck")
-      .agg(max($"deg").as("deg"), collect_list($"dst").as("dsts"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count() // materialize the iteration state once
-    pairs.unpersist(false)
+    val (deg, adj) = rankState(spark, dir)
     val isSeed = pmod($"node", lit(PprSeedMod)) === 0
     val nSeeds = deg.filter(isSeed).count()
     require(nSeeds > 0, s"graph_ppr: no seed nodes (mod $PprSeedMod) in graph")
@@ -1935,9 +1902,9 @@ object Graph {
       // iteration. The dense-rank shape stays.)
       val contrib = adj
         .join(ranks.filter($"pr" =!= 0L).withColumnRenamed("node", "src"), "src")
-        .select($"dsts", expr("pr DIV deg").as("c"))
+        .select($"nbrs", expr("pr DIV deg").as("c"))
         .filter($"c" =!= 0L)
-        .select(explode($"dsts").as("node"), $"c")
+        .select(explode($"nbrs").as("node"), $"c")
       val sums = contrib.groupBy($"node").agg(sum($"c").as("s"))
       ranks = deg.select($"node").join(sums, Seq("node"), "left")
         .select($"node",

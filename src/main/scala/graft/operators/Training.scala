@@ -658,17 +658,9 @@ object Training {
       .withColumn("cos", round(Dedup.cosinePre($"ea", $"eb", $"na", $"nb"), 6))
       .filter($"cos" >= CommunityTau)
       .select($"i", $"j", round($"cos" * 1000000d, 0).cast("long").as("w"))
-    // r14: both edge directions from ONE pass over the candidate/cosine
-    // subtree — the former two-branch union re-ran the whole pair
-    // pipeline per direction (guide §1.2: don't compute things twice)
-    val edges = edge0
-      .select(explode(array(
-        struct($"i".as("src"), $"j".as("dst"), $"w"),
-        struct($"j".as("src"), $"i".as("dst"), $"w"))).as("e"))
-      .select($"e.src".as("src"), $"e.dst".as("dst"), $"e.w".as("w"))
-      .repartition($"dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count() // materialize the iteration state once (LPA family doctrine)
+    // both edge directions from ONE pass over the candidate/cosine subtree
+    val edges = Graph.SymEdges(edge0, "i", "j", "w").persistByDst()
+    edges.df.count() // materialize the iteration state once (LPA family doctrine)
     val labels = Graph.lpaPropagate(edges, 3)
     // r14: single-pass community merge — ONE reference to the LPA
     // subtree (the former labeled/lonely union referenced `labels`
@@ -687,7 +679,7 @@ object Training {
     // eager-grid release (r14: through Release.grid — the same collect +
     // unpersist + rewrap as before, plus the grid bound and the
     // planCapture evidence hook the manual collect bypassed)
-    Release.grid(out, edges, classes)
+    Release.grid(out, edges.df, classes)
   }
 
   val embeddingCommunitiesSql: String =

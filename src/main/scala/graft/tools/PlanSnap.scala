@@ -2,25 +2,27 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Round-14 optimization evidence: dump `explain("formatted")` for the
-  * named queries to plans/r14/<query>_<tag>.txt so before/after plan
-  * claims in OPTIMIZATION_r13.md are mechanically checkable.
+/** Plan evidence: dump `explain("formatted")` for the named queries to
+  * <outDir>/<query>_<tag>.txt so before/after plan claims are
+  * mechanically checkable. The output directory is required, so a new
+  * before/after run never overwrites committed evidence (plans/r13,
+  * plans/r14).
   *
   * Operators ending in Release.grid / Release.checkpointed rebase their
   * result onto an ExistingRDD, which hides the computation plan from a
   * post-hoc explain — so this tool also installs the Release.planCapture
   * hook and appends every pre-release plan the query produced.
   *
-  * Usage: sbt 'runMain graft.tools.PlanSnap <before|after> q1 q2 ...'
+  * Usage: sbt 'runMain graft.tools.PlanSnap <outDir> <before|after> q1 q2 ...'
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanSnap <tag> <query> [query ...]")
-    val tag = args.head
-    val names = args.tail.toSeq
+    require(args.length >= 3, "usage: PlanSnap <outDir> <tag> <query> [query ...]")
+    val Array(outDir, tag) = args.take(2)
+    val names = args.toSeq.drop(2)
     val spark = graft.GraftSession.get(4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    Files.createDirectories(Paths.get("plans/r14"))
+    Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val captured = scala.collection.mutable.ArrayBuffer.empty[String]
       graft.operators.Release.planCapture = Some(df =>
@@ -36,9 +38,9 @@ object PlanSnap {
           s"-- pre-release computation plan ${i + 1}/${captured.size} " +
             "(Release rebases the returned frame; this is the real query) --\n" + p
         }.mkString("\n") + "\n-- returned frame (post-release rebase) --\n" + finalPlan
-      Files.write(Paths.get(s"plans/r14/${name}_$tag.txt"),
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"[plansnap] wrote plans/r14/${name}_$tag.txt")
+      val out = Paths.get(outDir, s"${name}_$tag.txt")
+      Files.write(out, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(s"[plansnap] wrote $out")
     }
     spark.stop()
   }

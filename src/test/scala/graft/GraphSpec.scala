@@ -203,4 +203,46 @@ class GraphSpec extends SparkSpec {
       s"r: $r vs ${row.getAs[Double]("assortativity")}")
     assert(math.abs(row.getAs[Double]("assortativity")) <= 1.0)
   }
+
+  test("SymEdges == the two-branch union form, with and without a carried weight") {
+    val pairs = Graph.coPairCounts(spark, sf).cache()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(",")))
+    val bare = rows(Graph.SymEdges(pairs, "pa", "pb").df)
+    val bareUnion = rows(pairs.select($"pa".as("src"), $"pb".as("dst"))
+      .union(pairs.select($"pb".as("src"), $"pa".as("dst"))))
+    val weighted = rows(Graph.SymEdges(pairs, "pa", "pb", "n_orders").df)
+    val weightedUnion = rows(pairs
+      .select($"pa".as("src"), $"pb".as("dst"), $"n_orders")
+      .unionByName(pairs.select($"pb".as("src"), $"pa".as("dst"), $"n_orders")))
+    val nPairs = pairs.count()
+    pairs.unpersist()
+    assert(bare === bareUnion)
+    assert(weighted === weightedUnion)
+    assert(weighted._1 === Seq("src", "dst", "n_orders"))
+    assert(weighted._2.length === 2 * nPairs && nPairs > 0)
+  }
+
+  test("chunked adjacency splits a >64k-degree hub into bounded chunks that recombine exactly") {
+    // a star: hub 0 with 70 000 leaves, the only way a test graph
+    // reaches the 64k chunk path (no sf node has degree > 65536)
+    val leaves = 70000L
+    val star = spark.range(1, leaves + 1).select(lit(0L).as("a"), $"id".as("b"))
+    val edges = Graph.SymEdges(star, "a", "b").df
+    val adj = Graph.chunkedAdjacency(edges, "src", "dst", Graph.degrees(edges)).cache()
+    val hub = adj.filter($"src" === 0L).collect()
+    val nbrs = hub.map(r => r.getSeq[Long](r.fieldIndex("nbrs")))
+    // every leaf is one single-neighbor chunk pointing back at the hub
+    val badLeaves = adj.filter($"src" =!= 0L)
+      .filter($"deg" =!= 1L || size($"nbrs") =!= 1 || $"nbrs"(0) =!= 0L).count()
+    val nRows = adj.count()
+    adj.unpersist()
+    assert(hub.length === math.ceil(leaves / 65536.0).toInt, "⌈deg/65536⌉ chunk rows")
+    assert(hub.forall(_.getAs[Long]("deg") == leaves), "every chunk carries the full degree")
+    assert(nbrs.forall(_.length <= 65536))
+    val recombined = nbrs.flatten.toSeq
+    assert(recombined.length === leaves && recombined.toSet === (1L to leaves).toSet,
+      "chunks recombine to exactly the leaf set")
+    assert(badLeaves === 0 && nRows === leaves + hub.length)
+  }
 }
